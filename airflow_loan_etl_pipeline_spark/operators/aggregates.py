@@ -10,6 +10,8 @@ the shuffle — which is exactly the shape that scales.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -161,3 +163,62 @@ def merge_aggregates(
         + [F.max(c).alias(c) for c in max_cols]
     )
     return merged.groupBy(*keys).agg(*aggs)
+
+
+def mergeable_partials(
+    df: DataFrame, group_cols: list[str], amount_col: str
+) -> tuple[pa.Table, pa.Table]:
+    """What mode imputation + :func:`grouped_metrics` need to know about
+    ``df``, in a form that adds across disjoint inputs, from ONE scan
+    (a grouping-sets aggregate) collected to the driver as Arrow:
+
+    - ``groups``: per RAW, nullable ``group_cols`` key (as strings):
+      ``n`` rows, ``amount_sum`` over the present amounts (null when
+      none) and ``amount_missing``, the amounts that are null or NaN —
+      what ``fillna`` replaces in a double column;
+    - ``values``: ``(column, value, n)`` for every non-null value of
+      ``group_cols + [amount_col]``, cast to string as
+      ``cleaning.melt_counts`` casts it, so modes picked from the
+      merged counts are the ones ``column_modes`` would pick.
+
+    The result is bounded by key combinations plus distinct values,
+    not by rows; streaming/loan_state.py merges and finalizes it.
+    """
+    value_col = "_value_of_" + amount_col
+    flat = df.select(
+        *[F.col(c).cast("string").alias(c) for c in group_cols],
+        F.col(amount_col).cast("string").alias(value_col),
+        F.col(amount_col).cast("double").alias("_amount"),
+    )
+    missing = F.col("_amount").isNull() | F.isnan("_amount")
+    keys = [*group_cols, value_col]
+    out = (
+        flat.groupingSets([group_cols, *([k] for k in keys)], *keys)
+        .agg(
+            F.grouping_id().alias("_gid"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(~missing, F.col("_amount"))).alias("amount_sum"),
+            F.count_if(missing).alias("amount_missing"),
+        )
+        .toArrow()
+    )
+
+    def rows_of(members: list[str]) -> pa.Table:
+        # grouping_id sets bit (len-1-i) for each key NOT grouped on
+        gid = sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys)
+                  if k not in members)
+        return out.filter(pc.equal(out["_gid"], gid))
+
+    groups = rows_of(group_cols).select(
+        [*group_cols, "n", "amount_sum", "amount_missing"]
+    )
+    values = []
+    for key, column in zip(keys, [*group_cols, amount_col]):
+        part = rows_of([key])
+        part = part.filter(pc.is_valid(part.column(key)))
+        values.append(pa.table({
+            "column": pa.array([column] * part.num_rows, pa.string()),
+            "value": part.column(key),
+            "n": part.column("n"),
+        }))
+    return groups, pa.concat_tables(values)

@@ -34,6 +34,9 @@ Semantics notes vs the engine's single-plan form
   polling task, drive_auto_compress_email.py:85-117) — so a mid-DAG
   failure re-runs the ETL over the cumulative ledgered set (idempotent
   overwrite) rather than re-screening files.
+- Both forms keep the same mergeable loan state under ``work_dir`` and
+  read only the files it does not cover yet
+  (drive_pipeline.advance_loan_state).
 """
 
 from __future__ import annotations
@@ -125,40 +128,30 @@ def run_spark_etl(
     watch_dir: str,
     work_dir: str,
 ) -> int:
-    """Task 2 (reference :573 ``run_spark_etl``): the loan ETL over
-    the cumulative LEDGERED file set (never a raw watch-dir glob —
+    """Task 2 (reference :573 ``run_spark_etl``): the loan aggregates
+    over the cumulative LEDGERED file set (never a raw watch-dir glob —
     that would ingest unsettled/mid-copy files task 1 just excluded),
-    aggregates written under ``work_dir``. Returns the aggregate row
-    count. Idempotent: overwrite, so a task retry re-lands the same
-    frame."""
-    from airflow_loan_etl_pipeline_spark import schemas
-    from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
-        clean_and_aggregate,
+    written under ``work_dir``. Returns the aggregate row count.
+
+    Shares the single-plan form's aggregate path
+    (drive_pipeline.advance_loan_state): Spark reads only the ledgered
+    files the loan state does not cover yet. Task 1 commits the ledger
+    first, so the state always trails the ledger, which the state's
+    ``covered <= processed`` rule accepts. Idempotent: a retry finds the
+    state already covering the ledger and re-lands the same frame."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        advance_loan_state,
     )
-    from airflow_loan_etl_pipeline_spark.sources.io import read_csv_dir
     from airflow_loan_etl_pipeline_spark.streaming.file_source import (
-        load_ledger,
+        ledger_ids,
     )
 
-    paths = _work_paths(work_dir)
-    ledger_path = os.path.join(work_dir, "ledger")
-    names = sorted(
-        r["file_id"] for r in load_ledger(spark, ledger_path).collect()
-    )
-    if not names:
+    processed = ledger_ids(os.path.join(work_dir, "ledger"))
+    if not processed:
         return 0
-    loans = read_csv_dir(
-        spark, [os.path.join(watch_dir, n) for n in names],
-        schema=schemas.LOAN,
-    )
-    _cleaned, aggs = clean_and_aggregate(
-        loans,
-        group_cols=["status", "product_type", "branch"],
-        amount_col="amount",
-        date_col="created_at",
-    )
-    aggs.write.mode("overwrite").parquet(paths["aggregates"])
-    return spark.read.parquet(paths["aggregates"]).count()
+    aggs = advance_loan_state(spark, watch_dir, work_dir, processed)
+    aggs.write.mode("overwrite").parquet(_work_paths(work_dir)["aggregates"])
+    return aggs.count()
 
 
 def send_summary_email(

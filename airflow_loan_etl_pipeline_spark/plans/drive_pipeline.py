@@ -6,17 +6,30 @@ through the Drive-shaped DataSource (prefix/MIME pushdown at
 planning), settle-age + processed-ledger screening, per-file gzip
 compression WITH the original/compressed size metrics computed on the
 executors (Arrow-batched — the reference round-trips every byte
-through the driver, :268-306), the loan ETL over the cumulative
-landing glob, and the HTML summary report (optionally delivered over
+through the driver, :268-306), the loan aggregates over every
+processed file, and the HTML summary report (optionally delivered over
 SMTP). A rerun with no new files is a no-op before any data work —
 the cron-idempotency the reference gets from its processed-ids JSON
-(:85-117), here a parquet ledger anti-join.
+(:85-117), here a one-file parquet ledger and an anti-join.
+
+A tick reads only its new files. The aggregates (mode imputation, then
+count and sum per ``(status, product_type, branch)``) are kept as a
+mergeable loan state under ``work_dir``: ``loan_state.parquet``, one
+Parquet file holding per-group partials keyed by the raw nullable key,
+per-column value counts of the four columns the aggregate depends on,
+and the set of files it covers (layout: streaming/loan_state.py).
+Spark scans ``processed - covered`` in one grouping-sets pass, the
+driver merges that into the state, re-picks the modes and builds the
+table; see :func:`advance_loan_state` for the rebuild rule. So a
+ledgered file that is edited later is not re-read: its rows stay
+counted as they were when it was processed, as its ``.gz`` and the
+reference's by-ID ledger stay as they were.
 
 Differences by design (same inversions as the rest of the engine):
 no landing copy (executors read the source files directly), no
 driver-side byte shuttling, the ledger update happens only after the
 decision frames are pinned (localCheckpoint) so a replay cannot
-self-collide.
+self-collide, and the state is committed before the ledger.
 """
 
 from __future__ import annotations
@@ -28,10 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_loan_etl_pipeline_spark import schemas
-from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
-    clean_and_aggregate,
-    latest_aggregates_summary,
-)
+from airflow_loan_etl_pipeline_spark.operators.aggregates import mergeable_partials
+from airflow_loan_etl_pipeline_spark.plans.loan_etl import latest_aggregates_summary
 from airflow_loan_etl_pipeline_spark.plans.report import (
     compression_summary,
     render_html_report,
@@ -39,11 +50,16 @@ from airflow_loan_etl_pipeline_spark.plans.report import (
 )
 from airflow_loan_etl_pipeline_spark.sources.io import read_csv_dir
 from airflow_loan_etl_pipeline_spark.streaming.file_source import (
+    ledger_ids,
     load_ledger,
     new_files,
     update_ledger,
 )
-
+from airflow_loan_etl_pipeline_spark.streaming.loan_state import (
+    AMOUNT_COL,
+    GROUP_COLS,
+    LoanState,
+)
 
 def _register_listing(spark: SparkSession) -> None:
     from airflow_loan_etl_pipeline_spark.sources.drive_source import (
@@ -95,6 +111,37 @@ def compress_new_files(fresh: DataFrame, out_dir: str) -> DataFrame:
     )
 
 
+def advance_loan_state(
+    spark: SparkSession,
+    watch_dir: str,
+    work_dir: str,
+    processed: set[str],
+) -> DataFrame:
+    """Bring the loan state under ``work_dir`` (streaming/loan_state.py)
+    up to the ``processed`` file names and return the aggregates over
+    all of them. Spark reads only ``processed - covered``, in one scan.
+    A state that is missing, unreadable or covers a file outside
+    ``processed`` is rebuilt from every processed file: so a crash
+    between the state write and the ledger write (the file is offered
+    again and is already covered) or a first run after an upgrade
+    still counts every file exactly once.
+
+    The returned frame is built from the rows, not read from the state
+    file, so it stays valid when a later tick replaces that file."""
+    path = os.path.join(work_dir, "loan_state.parquet")
+    state = LoanState.load(path)
+    if state is None or not state.files <= processed:
+        state = LoanState.empty()
+    delta = sorted(processed - state.files)
+    if delta:
+        loans = read_csv_dir(
+            spark, [os.path.join(watch_dir, n) for n in delta], schema=schemas.LOAN
+        )
+        state = state.merge(*mergeable_partials(loans, GROUP_COLS, AMOUNT_COL), delta)
+        state.save(path)
+    return spark.createDataFrame(state.aggregates())
+
+
 def run_drive_pipeline(
     spark: SparkSession,
     watch_dir: str,
@@ -132,19 +179,12 @@ def run_drive_pipeline(
         compress_new_files(fresh, os.path.join(work_dir, "compressed"))
     ).localCheckpoint()
 
-    # ETL input = exactly the SCREENED cumulative set (previously
-    # ledgered files + this tick's fresh ones) — a raw watch-dir glob
-    # would ingest unsettled/mid-copy files the screen just excluded
-    processed_names = {
-        r["file_id"] for r in load_ledger(spark, ledger_path).collect()
-    } | {r["file_id"] for r in fresh.select("file_id").collect()}
-    loan_paths = [os.path.join(watch_dir, n) for n in sorted(processed_names)]
-    loans = read_csv_dir(spark, loan_paths, schema=schemas.LOAN)
-    _cleaned, aggs = clean_and_aggregate(
-        loans,
-        group_cols=["status", "product_type", "branch"],
-        amount_col="amount",
-        date_col="created_at",
+    # the ETL's input is exactly the SCREENED cumulative set (ledgered
+    # files + this tick's fresh ones): a raw watch-dir glob would ingest
+    # unsettled/mid-copy files the screen just excluded
+    fresh_ids = [r["file_id"] for r in fresh.select("file_id").collect()]
+    aggs = advance_loan_state(
+        spark, watch_dir, work_dir, ledger_ids(ledger_path) | set(fresh_ids)
     )
 
     file_summaries = [r.asDict() for r in summaries_df.collect()]
@@ -153,5 +193,5 @@ def run_drive_pipeline(
     if smtp:
         send_html_report(html, **smtp)
 
-    update_ledger(spark, ledger_path, fresh.select("file_id"))
+    update_ledger(spark, ledger_path, fresh_ids)
     return file_summaries, aggs, html

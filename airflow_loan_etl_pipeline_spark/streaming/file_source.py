@@ -12,16 +12,23 @@ Streaming's file source, so the idiomatic rebuild is:
   IS the cron poll that drains everything then stops (ST1);
   `maxFileAge` / modifiedAfter options handle the settle window (ST3).
 - **Batch-incremental mode** (`incremental_batch`): for engines that
-  poll with plain batch jobs, a parquet ledger table + broadcast
-  left_anti join reproduces exactly-once file semantics (F3/J1), and a
-  mod-time predicate reproduces the settle window (F4).
+  poll with plain batch jobs, a parquet ledger + broadcast left_anti
+  join reproduces exactly-once file semantics (F3/J1), and a mod-time
+  predicate reproduces the settle window (F4). The ledger is one
+  Parquet file of ``(file_id, processed_at)``, read and rewritten on
+  the driver (it is file metadata) and committed by atomic rename.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
+from collections.abc import Iterable
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,6 +40,9 @@ LEDGER_SCHEMA = T.StructType(
         T.StructField("file_id", T.StringType()),
         T.StructField("processed_at", T.TimestampType()),
     ]
+)
+LEDGER_ARROW = pa.schema(
+    [("file_id", pa.string()), ("processed_at", pa.timestamp("us", tz="UTC"))]
 )
 
 
@@ -78,11 +88,32 @@ def settled_files(
     )
 
 
+def _read_ledger(ledger_path: str) -> pa.Table | None:
+    """The ledger as an Arrow table, None when there is none. Reads the
+    one-file form and the directory an older Spark writer left
+    (``part-*.parquet`` + ``_SUCCESS``; pyarrow skips ``_``/``.``
+    files), and falls back to ``<ledger>.old``, where
+    :func:`commit_parquet` parks such a directory while it migrates."""
+    for path in (ledger_path, ledger_path + ".old"):
+        if os.path.exists(path):
+            table = pq.read_table(path, columns=["file_id", "processed_at"])
+            return table.cast(LEDGER_ARROW)
+    return None
+
+
+def ledger_ids(ledger_path: str) -> set[str]:
+    """file_ids in the ledger (empty when there is none); read on the
+    driver, no Spark job."""
+    table = _read_ledger(ledger_path)
+    return set() if table is None else set(table.column("file_id").to_pylist())
+
+
 def load_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     """ST2 ledger table (parquet). Empty frame when absent."""
-    if os.path.exists(ledger_path):
-        return spark.read.parquet(ledger_path)
-    return spark.createDataFrame([], LEDGER_SCHEMA)
+    table = _read_ledger(ledger_path)
+    if table is None:
+        return spark.createDataFrame([], LEDGER_SCHEMA)
+    return spark.createDataFrame(table, LEDGER_SCHEMA)
 
 
 def new_files(candidates: DataFrame, ledger: DataFrame) -> DataFrame:
@@ -91,28 +122,48 @@ def new_files(candidates: DataFrame, ledger: DataFrame) -> DataFrame:
     return ledger_anti_join(candidates, ledger.select("file_id"), key="file_id")
 
 
-def update_ledger(
-    spark: SparkSession, ledger_path: str, processed: DataFrame
-) -> None:
-    """Merge newly processed file ids into the ledger (idempotent)."""
-    existing = load_ledger(spark, ledger_path)
-    merged = (
-        existing.select("file_id")
-        .unionByName(processed.select("file_id"))
-        .distinct()
-        .withColumn("processed_at", F.current_timestamp())
-    )
-    # Two-phase write: parquet overwrite of the path we are reading from
-    # would clobber the source mid-scan. The tmp copy is deleted after
-    # the final write lands — a crash in between leaves the previous
-    # ledger intact plus a stale .tmp the next update overwrites.
-    import shutil
+def commit_parquet(table: pa.Table, path: str) -> None:
+    """Replace ``path`` with ``table`` as one Parquet file: write a
+    sibling temp file, fsync it, ``os.replace`` it over ``path``. A
+    reader sees the old file or the new one, never a partial write. A
+    directory at ``path`` (the older ledger form) is first renamed to
+    ``<path>.old``, which readers fall back to until it is removed."""
+    tmp = path + ".tmp"
+    pq.write_table(table, tmp)
+    with open(tmp, "rb") as f:
+        os.fsync(f.fileno())
+    old = path + ".old"
+    if os.path.isdir(path):
+        shutil.rmtree(old, ignore_errors=True)
+        os.replace(path, old)
+    os.replace(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
 
-    tmp = ledger_path + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
-    final.write.mode("overwrite").parquet(ledger_path)
-    shutil.rmtree(tmp, ignore_errors=True)
+
+def update_ledger(
+    spark: SparkSession,
+    ledger_path: str,
+    processed: DataFrame | Iterable[str],
+) -> None:
+    """Add newly processed file ids (a frame with ``file_id`` or the ids
+    themselves) to the ledger. Idempotent: a known id keeps the
+    ``processed_at`` of the tick that first recorded it. The ledger is
+    rewritten on the driver and committed by atomic rename, so a crash
+    leaves the previous ledger whole."""
+    if isinstance(processed, DataFrame):
+        processed = [r["file_id"] for r in processed.select("file_id").collect()]
+    old = _read_ledger(ledger_path)
+    known = set() if old is None else set(old.column("file_id").to_pylist())
+    fresh = sorted(set(processed) - known)
+    if not fresh and old is not None and os.path.isfile(ledger_path):
+        return
+    now = datetime.now(timezone.utc)
+    table = pa.table(
+        {"file_id": fresh, "processed_at": [now] * len(fresh)}, schema=LEDGER_ARROW
+    )
+    if old is not None:
+        table = pa.concat_tables([old, table])
+    commit_parquet(table, ledger_path)
 
 
 def incremental_batch(

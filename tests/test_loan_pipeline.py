@@ -457,6 +457,24 @@ def test_airflow_dag_task_bodies_equivalent_to_single_plan(spark, tmp_path):
     assert ad.poll_and_process_drive_files(spark, str(watch), work_t) == []
     assert ad.run_spark_etl(spark, str(watch), work_t) == n
 
+    # tick 3: one file lands -> both forms fold it into their loan
+    # state (task 1 commits the ledger before task 2 runs) and agree
+    (watch / "loan_c.csv").write_text(
+        HEADER + "\nLN7,CU5,2024-03-06 09:00:00,,6.5,24,CLOSED,,South,GOOD\n"
+    )
+    s3 = ad.poll_and_process_drive_files(spark, str(watch), work_t)
+    assert [s["filename"] for s in s3] == ["loan_c.csv"]
+    ad.run_spark_etl(spark, str(watch), work_t)
+    html_t = ad.send_summary_email(spark, work_t)
+    _s, aggs, html_s = run_drive_pipeline(spark, str(watch), work_s)
+    assert [s["filename"] for s in _s] == ["loan_c.csv"]
+    task_aggs = spark.read.parquet(ad._work_paths(work_t)["aggregates"])
+    assert sorted(map(tuple, task_aggs.select(*cols).collect())) == sorted(
+        map(tuple, aggs.select(*cols).collect())
+    )
+    assert sum(r["loan_count"] for r in aggs.collect()) == 7
+    assert html_t.replace(work_t, "WORK") == html_s.replace(work_s, "WORK")
+
 
 def test_airflow_dag_builder_gated_on_airflow(tmp_path):
     """build_dag needs Airflow only at call time: importing the module
